@@ -1,0 +1,11 @@
+package perfbench
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** JSON for the run record and the span file. */
+object Json {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  def write(v: Any): String = mapper.writeValueAsString(v)
+}

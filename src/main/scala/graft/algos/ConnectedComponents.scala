@@ -27,8 +27,7 @@ final case class CCResult(components: DataFrame, iterations: Int)
 object ConnectedComponents {
 
   def run(spark: SparkSession, edgesSym: DataFrame, n: Long, numPartitions: Int,
-          maxIter: Int = 64,
-          checkpointer: Option[graft.runtime.IterationCheckpointer] = None): CCResult = {
+          maxIter: Int = 64): CCResult = {
     // persist edges hash-partitioned on dst: the per-round min_second gather
     // joins on dst, so the (big) edge side is shuffled exactly once here
     val edges = edgesSym.repartition(numPartitions, col("dst"))
@@ -85,8 +84,6 @@ object ConnectedComponents {
       fState = newFState
       gpState = newGpState
       iter += 1
-      checkpointer.foreach(_.save(fState.df.select(col("id"), col("v")), iter,
-        Map("changed" -> nChanged.toLong.toString)))
     }
     edges.unpersist()
     CCResult(fState.df.select(col("id"), col("v").as("component")), iter)

@@ -25,10 +25,9 @@ final case class EigenvectorResult(scores: DataFrame, iterations: Int)
   * the unnormalized magnitude grows like (1+λ_max)^k ≤ (1+Δ)^k; for the
   * default 5 rounds that overflows only past Δ ≈ 10^61 — unreachable.
   *
-  * Spark-first shape (identical to [[Katz]]): the persisted CSR-bucket
-  * adjacency joins the hash-co-partitioned score vector zero-exchange, the
-  * per-source score is projected BEFORE the explode, and the dst partial
-  * sums map-side combine into the round's only shuffle.
+  * Spark-first shape: `Adjacency.gather` with factor x(u), as in [[Katz]].
+  * The step reads `prev` twice (gather and the +x(v) shift), so rounds
+  * cannot chain two per job and the loop stays its own.
   *
   * Fixed `maxIter` rounds (the oracle-unroll discipline shared with
   * `pagerank_iter5`/`katz_centrality`). Output (id, v), ‖v‖₂ = 1.
@@ -46,12 +45,7 @@ object Eigenvector {
     var iter = 0
     while (iter < maxIter) {
       val t = state.df
-      val contrib = adj.rows
-        .join(t, adj.rows("src") === t("id"))
-        .select(col("dsts"), col("v").as("c"))
-        .select(explode(col("dsts")).as("_dn"), col("c"))
-        .select(col("_dn").cast("long").as("dst"), col("c"))
-      val gathered = contrib.groupBy("dst").agg(sum(col("c")).as("g"))
+      val gathered = adj.gather(t, col("v"))
       val stepped = t
         .join(gathered, t("id") === gathered("dst"), "left_outer")
         .select(col("id"), (col("v") + coalesce(col("g"), lit(0.0))).as("v"))

@@ -15,13 +15,13 @@ final case class HitsResult(scores: DataFrame, iterations: Int)
   * — two `plus_second`-semiring mxv products (the same kernel family the
   * reference expresses them with) plus an L2 scalar reduction each.
   *
-  * Spark-first shape: BOTH gathers run the zero-exchange plan of
-  * `PageRank.run`, each against its own persisted CSR-bucket adjacency —
-  * the forward adjacency for the authority step and the REVERSED (in-edge)
-  * adjacency for the hub step. Building the transpose layout once at graph
-  * build (its own single shuffle) is what keeps every iteration free of
-  * edge-scale shuffles in both directions; per iteration only the two small
-  * score vectors and their map-side-combined partials move.
+  * Spark-first shape: BOTH gathers are `Adjacency.gather`, each against its
+  * own persisted CSR-bucket adjacency — the forward adjacency for the
+  * authority step and the REVERSED (in-edge) adjacency for the hub step.
+  * Building the transpose layout once at graph build (its own single
+  * shuffle) is what keeps every iteration free of edge-scale shuffles in
+  * both directions; per iteration only the two small score vectors and
+  * their map-side-combined partials move.
   *
   * The L2 normalization never materializes a scaled vector: each gather's
   * sum-of-squares rides the SAME job that materializes the raw sums
@@ -45,13 +45,8 @@ object HITS {
     /** one UNNORMALIZED gather of `scores/divisor`: raw per-neighbor sums
       * plus their sum-of-squares in a single materialization pass. */
     def gather(adj: Adjacency, scores: DataFrame, divisor: Double) = {
-      val contrib = adj.rows
-        .join(scores, adj.rows("src") === scores("id"))
-        .select(col("dsts"), (col("v") / divisor).as("c"))
-        .select(explode(col("dsts")).as("_dn"), col("c"))
-        .select(col("_dn").cast("long").as("dst"), col("c"))
-      val raw = contrib.groupBy("dst").agg(sum(col("c")).as("v"))
-        .select(col("dst").as("id"), col("v"), (col("v") * col("v")).as("_sq"))
+      val raw = adj.gather(scores, col("v") / divisor)
+        .select(col("dst").as("id"), col("g").as("v"), (col("g") * col("g")).as("_sq"))
       val (st, sumSq) = Ckpt.materializeWithSum(raw, "_sq")
       (st, math.sqrt(sumSq))
     }

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Ckpt
 
 final case class LPResult(labels: DataFrame, iterations: Int)
 
@@ -28,19 +27,14 @@ final case class LPResult(labels: DataFrame, iterations: Int)
 object LabelPropagation {
 
   def run(spark: SparkSession, edgesSym: DataFrame, n: Long, numPartitions: Int,
-          maxIter: Int = 10,
-          checkpointer: Option[graft.runtime.IterationCheckpointer] = None): LPResult = {
+          maxIter: Int = 10): LPResult = {
     // gather side of the per-round vote join persisted pre-partitioned on dst
     val edges = edgesSym.repartition(numPartitions, col("dst"))
       .sortWithinPartitions("dst").persist() // sorted once: SMJ reuses it per round
     edges.count()
-    var state = Ckpt.materialize(
-      spark.range(n).repartition(numPartitions, col("id"))
-        .select(col("id"), col("id").as("lbl")))
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxIter) {
-      val l = state.df
+    val init = spark.range(n).repartition(numPartitions, col("id"))
+      .select(col("id"), col("id").as("lbl"))
+    val (labels, iters) = Fixpoint.converge(init, maxIter, 0.0, "_chg") { l =>
       val ll = l.select(col("id").as("_j"), col("lbl").as("_l"))
       // histogram of neighbor labels per vertex (plus_pair over (i, label))
       val votes = edges.join(ll, col("dst") === col("_j"))
@@ -49,20 +43,13 @@ object LabelPropagation {
       // min_by over the lexicographic struct (-count, label)
       val nl = votes.groupBy(col("src").as("id"))
         .agg(min_by(col("_l"), struct((-col("_c")).as("nc"), col("_l"))).as("_nl"))
-      val merged = l.join(nl, Seq("id"), "left_outer")
+      l.join(nl, Seq("id"), "left_outer")
         .select(col("id"),
           coalesce(col("_nl"), col("lbl")).as("lbl"),
           when(coalesce(col("_nl"), col("lbl")) =!= col("lbl"), 1.0)
             .otherwise(0.0).as("_chg"))
-      val (newState, nChanged) = Ckpt.materializeWithSum(merged, "_chg")
-      changed = nChanged > 0
-      state.release()
-      state = newState
-      iter += 1
-      checkpointer.foreach(_.save(state.df.select(col("id"), col("lbl")), iter,
-        Map("changed" -> nChanged.toLong.toString)))
     }
     edges.unpersist()
-    LPResult(state.df.select(col("id"), col("lbl").as("label")), iter)
+    LPResult(labels.select(col("id"), col("lbl").as("label")), iters)
   }
 }

@@ -2,12 +2,11 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Ckpt
 import graft.graph.Adjacency
 import graft.runtime.IterationCheckpointer
 
 final case class PageRankResult(scores: DataFrame, iterations: Int,
-                                edgesTraversed: Long, finalRdiff: Double)
+                                edgesTraversed: Long)
 
 /** PageRank with the reference's exact `pagerank_3f` semantics
   * (`/root/reference/notebooks/Pagerank Demo.ipynb`):
@@ -20,16 +19,11 @@ final case class PageRankResult(scores: DataFrame, iterations: Int,
   *         r = teleport ; r += A'w (plus_second semiring)
   *         rdiff = sum |t - r| ; stop when rdiff <= tol
   *
-  * Spark-first shape: the `A'w` gather over the `plus_second` semiring is
-  * expressed directly on the persisted CSR-bucket adjacency —
-  * join(scores on src) → explode(dsts) with contribution
-  * `score*damping/deg` → groupBy(dst).sum — so each iteration shuffles only
-  * the small score vector plus the per-edge partial sums (map-side combined).
-  * The adjacency itself is never reshuffled after build.
-  *
-  * Iteration state is re-materialized per round via Ckpt (flat plan, O(1)
-  * planning cost and O(1) storage in iteration count), and the previous
-  * round's blocks are released immediately.
+  * Spark-first shape: the `A'w` gather is `Adjacency.gather` on the
+  * persisted CSR-bucket adjacency with per-source factor `score*damping/deg`,
+  * driven by `Fixpoint.linear` with `base = teleport` — each iteration
+  * shuffles only the small score vector plus the map-side-combined per-dst
+  * partial sums; the adjacency is never reshuffled after build.
   *
   * We compute in FP64 rather than the notebook's FP32 (documented
   * divergence: FP64 is strictly closer to the true recurrence, and the
@@ -41,102 +35,12 @@ object PageRank {
           tol: Double = 1e-4, maxIter: Int = 100,
           checkpointer: Option[IterationCheckpointer] = None): PageRankResult = {
     val n = adj.numVertices
-    val teleport = (1.0 - damping) / n
-    val p = adj.numPartitions
-
-    // Resume from the latest checkpoint if one exists (resumable runs).
-    val (startIter, startScores) = checkpointer.flatMap(_.latest(spark)) match {
-      case Some((it, df)) => (it, df.repartition(p, col("id")))
-      case None =>
-        // hash-partitioned like every later state: the rewrap preserves it,
-        // so even iteration 1 joins the adjacency with zero score shuffle
-        (0, spark.range(n).repartition(p, col("id"))
-          .select(col("id"), lit(1.0 / n).as("v")))
-    }
-
-    var state = Ckpt.materialize(startScores)
-    var t = state.df
-    var iter = startIter
-    var rdiff = Double.MaxValue
-
-    // One full PageRank step as a PLAN (no materialization): gather along the
-    // out-edges, then dense completion against the static id universe. The
-    // universe is read from the CACHED state `t` (its ids are exactly
-    // 0..n-1 every iteration), NOT from `prev`: `prev` may itself be an
-    // unmaterialized step plan, and referencing it twice would recompute its
-    // whole subtree into both branches (the measured MinReach double-step
-    // failure mode). With `prev` referenced exactly once, steps chain into a
-    // linear plan.
-    def stepPlan(prev: DataFrame): DataFrame = {
-      val contrib = adj.rows.alias("a")
-        .join(prev.alias("s"), col("a.src") === col("s.id"))
-        .select(col("a.dsts").as("_ds"), (col("s.v") * damping / col("a.deg")).as("c"))
-        .select(explode(col("_ds")).as("_dn"), col("c"))
-        .select(col("_dn").cast("long").as("dst"), col("c"))
-      val g = contrib.groupBy("dst").agg(sum(col("c")).as("g"))
-      t.select(col("id")).alias("u")
-        .join(g.alias("g"), col("u.id") === col("g.dst"), "left_outer")
-        .select(col("u.id").as("id"),
-          (lit(teleport) + coalesce(col("g.g"), lit(0.0))).as("v"))
-    }
-
-    // Exact-iteration fast path (tol == 0: the caller asked for exactly
-    // maxIter steps, so no per-step convergence metric is needed): run TWO
-    // steps per materialized job. Scores after k steps are identical to the
-    // single-step loop — same gather + dense-completion arithmetic, the
-    // completion universe (the cached state's ids) is the same dense 0..n-1
-    // either way — but the state-cache write+read and the job/planning
-    // round-trip are paid half as often, which is exactly the
-    // parallelism-INDEPENDENT per-iteration cost that depresses the
-    // high-core scaling legs (BENCH/BASELINE.md 8→32). Checkpointed runs
-    // keep the single-step loop: their contract saves every iteration.
-    val exactIters = tol == 0.0 && checkpointer.isEmpty
-    while (exactIters && maxIter - iter >= 2) {
-      val newState = Ckpt.materialize(stepPlan(stepPlan(t)))
-      state.release()
-      state = newState
-      t = newState.df
-      iter += 2
-    }
-
-    while (iter < maxIter && rdiff > tol) {
-      // gather: contribution of src along each out-edge = v*damping/deg.
-      // The per-source factor is projected BEFORE the explode (an expression
-      // beside explode() evaluates per GENERATED row — once per edge instead
-      // of once per source).
-      val contrib = adj.rows
-        .join(t, adj.rows("src") === t("id"))
-        .select(col("dsts"), (col("v") * damping / col("deg")).as("c"))
-        .select(explode(col("dsts")).as("_dn"), col("c"))
-        // widen the (possibly int-packed, see Adjacency.fromPacked) neighbor
-        // id to long right after the generator: a register-width cast per
-        // edge row, so the aggregation keys/partitioning stay long and the
-        // downstream zero-exchange join shape is untouched
-        .select(col("_dn").cast("long").as("dst"), col("c"))
-      // partial(map-side)+final aggregation on dst. An exchange-first
-      // variant (repartition raw per-edge rows, aggregate after the shuffle,
-      // keeping every agg map |V|/p-sized) was measured and REJECTED: the
-      // row reduction the map-side combine buys (~2× here) outweighs its
-      // larger hash maps at every parallelism level tested — 32-core
-      // iterations were ~3× slower shuffling the raw edge stream.
-      val gathered = contrib.groupBy("dst").agg(sum(col("c")).as("g"))
-      // dense completion (r[:] = teleport, then accum plus) + rdiff in ONE
-      // left-outer join: the old score vector IS the dense id universe, so
-      // no separate vertices join is needed
-      val steppedPlan = t.select(col("id"), col("v").as("_ov"))
-        .join(gathered, col("id") === gathered("dst"), "left_outer")
-        .select(col("id"),
-          (lit(teleport) + coalesce(col("g"), lit(0.0))).as("v"),
-          abs(lit(teleport) + coalesce(col("g"), lit(0.0)) - col("_ov")).as("_d"))
-      // fused: one job materializes the new scores AND sums |t - r|
-      val (newState, d) = Ckpt.materializeWithSum(steppedPlan, "_d")
-      rdiff = d
-      state.release()
-      state = newState
-      t = newState.df.select(col("id"), col("v"))
-      iter += 1
-      checkpointer.foreach(_.save(t, iter, Map("rdiff" -> rdiff.toString)))
-    }
-    PageRankResult(t, iter, adj.numEdges * iter.toLong, rdiff)
+    // hash-partitioned like every later state: the rewrap preserves it, so
+    // even iteration 1 joins the adjacency with zero score shuffle
+    val init = spark.range(n).repartition(adj.numPartitions, col("id"))
+      .select(col("id"), lit(1.0 / n).as("v"))
+    val (scores, iters) = Fixpoint.linear(adj, init, lit((1.0 - damping) / n),
+      col("v") * damping / col("deg"), tol, maxIter, checkpointer)
+    PageRankResult(scores, iters, adj.numEdges * iters.toLong)
   }
 }

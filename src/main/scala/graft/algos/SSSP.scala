@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Ckpt
 
 /** Single-source shortest paths over the min_plus semiring — the reference's
   * introductory algorithm (`/root/reference/notebooks/Intro to GraphBLAS +
@@ -19,17 +18,13 @@ import graft.core.Ckpt
 object SSSP {
 
   def run(spark: SparkSession, edges: DataFrame, source: Long, numPartitions: Int,
-          maxIter: Int = 64,
-          checkpointer: Option[graft.runtime.IterationCheckpointer] = None): DataFrame = {
+          maxIter: Int = 64): DataFrame = {
     import spark.implicits._
     val e = edges.repartition(numPartitions, col("src"))
       .sortWithinPartitions("src").persist() // sorted once: SMJ reuses it per round
     e.count()
-    var state = Ckpt.materialize(Seq((source, 0.0)).toDF("id", "v"))
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxIter) {
-      val d = state.df
+    val (dist, _) = Fixpoint.converge(Seq((source, 0.0)).toDF("id", "v"), maxIter,
+        0.0, "_chg") { d =>
       // relax: cand(j) = min over in-edges (i,j) of d(i) + w(i,j)
       val dl = d.select(col("id").as("_i"), col("v").as("_dv"))
       val cand = e.join(dl, col("src") === col("_i"))
@@ -38,21 +33,14 @@ object SSSP {
       // flag (the old shape re-joined the merged result against the prior
       // state — a second join + exchange per round carrying no new
       // information: both operands are already present in the merge)
-      val stepped = d.select(col("id"), col("v").as("_pv"))
+      d.select(col("id"), col("v").as("_pv"))
         .join(cand.select(col("id"), col("v").as("_cv")), Seq("id"), "full_outer")
         .select(col("id"),
           least(col("_pv"), coalesce(col("_cv"), col("_pv"))).as("v"),
           when(col("_pv").isNull || col("_cv") < col("_pv"), 1.0)
             .otherwise(0.0).as("_chg"))
-      val (newState, nChanged) = Ckpt.materializeWithSum(stepped, "_chg")
-      changed = nChanged > 0
-      state.release()
-      state = newState
-      iter += 1
-      checkpointer.foreach(_.save(state.df.select(col("id"), col("v")), iter,
-        Map("changed" -> nChanged.toLong.toString)))
     }
     e.unpersist()
-    state.df.select(col("id"), col("v").as("dist"))
+    dist.select(col("id"), col("v").as("dist"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -18,8 +18,8 @@ import org.apache.spark.storage.StorageLevel
   * per-edge contribution `score/deg` needs no extra degree join at
   * iteration time. NOTE the element type of `dsts` is INT whenever
   * numVertices fits (fromPacked's int-packing — half the shuffle/cache
-  * bytes); consumers must cast the exploded element back to long before
-  * joining/aggregating against long-keyed state, as PageRank/PPR/HITS do.
+  * bytes); `gather` casts the exploded element back to long before
+  * aggregating, so every consumer sees long-keyed sums.
   *
   * Hub salting: a vertex with out-degree above `maxChunk` is split into
   * ceil(deg/maxChunk) rows via arithmetic on dst (`dst % nChunks`) — no
@@ -36,6 +36,30 @@ import org.apache.spark.storage.StorageLevel
 final case class Adjacency(rows: DataFrame, numVertices: Long, numEdges: Long,
                            numPartitions: Int) {
   def unpersist(): Unit = rows.unpersist()
+
+  /** The `plus_second`/`plus_times` gather Aᵀ·f — the one kernel behind
+    * PageRank, PPR, Katz, Eigenvector and HITS (the reference's
+    * `semiring(A.T @ x)` mxv). Joins the rows to `state` on `src = id` and
+    * returns `(dst: long, g: double)`, where g sums `factor` over dst's
+    * in-edges. `factor` may read the state's columns and `deg`.
+    *
+    *  - Both sides are aliased (`a`, `s`), so `state` may be an
+    *    unmaterialized step plan over the same cached relations.
+    *  - `factor` is projected BEFORE the explode: an expression beside
+    *    explode() evaluates once per generated edge row, not once per source.
+    *  - The (possibly int-packed) neighbour id is widened to long right after
+    *    the generator, so the aggregation keys and partitioning stay long.
+    *  - groupBy(dst).sum runs partial (map-side) + final aggregation. An
+    *    exchange-first variant (shuffle raw per-edge rows, aggregate after)
+    *    was measured and rejected: the ~2× row reduction of the map-side
+    *    combine beats its larger hash maps at every parallelism tested. */
+  def gather(state: DataFrame, factor: Column): DataFrame =
+    rows.alias("a")
+      .join(state.alias("s"), col("a.src") === col("s.id"))
+      .select(col("a.dsts"), factor.as("c"))
+      .select(explode(col("dsts")).as("_dn"), col("c"))
+      .select(col("_dn").cast("long").as("dst"), col("c"))
+      .groupBy("dst").agg(sum(col("c")).as("g"))
 }
 
 object Adjacency {
@@ -65,8 +89,8 @@ object Adjacency {
     * `array<int>` (round 4): the arrays are the bulk of the persisted bytes
     * and of every iteration's scan traffic, and this box's 8+-core legs are
     * DRAM-bandwidth-bound (BENCH/BASELINE.md) — halving array bytes buys
-    * real headroom exactly where the scaling gate is tightest. Consumers
-    * (PageRank) widen the neighbor id back to long right after the explode
+    * real headroom exactly where the scaling gate is tightest. `gather`
+    * widens the neighbor id back to long right after the explode
     * (a register-width cast per edge row), keeping every aggregation/join
     * key long so the zero-exchange loop plan is unchanged — the win is the
     * persisted bytes and the per-iteration array SCAN, not the shuffle key

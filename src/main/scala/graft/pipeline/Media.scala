@@ -20,11 +20,8 @@ import org.apache.spark.sql.types._
   *    ITU-T T.81 Huffman + IDCT — see graft.pipeline.Jpeg), GIF
   *    (pure-JVM variable-width LZW), and gzip/zstd/bzip2 text payloads
   *    (zstd-jni and commons-compress ship inside the Spark distribution).
-  *  - COMPRESSED codecs with no pure-JVM story left (mp3/h264 — video and
-  *    perceptual audio) still
-  *    go through `decodeStub` — those need native libraries this container
-  *    doesn't ship; the stub keeps the distributed plumbing (schema,
-  *    batching, partitioning) real and clearly marks the codec call site.
+  * Codecs with no pure-JVM decoder (mp3/h264 — video and perceptual audio)
+  * are not supported.
   */
 object Media {
 
@@ -33,13 +30,6 @@ object Media {
   def metadata(df: DataFrame, binCol: String, keyCol: String): DataFrame =
     df.select(col(keyCol), length(col(binCol)).as("n_bytes"),
       md5(col(binCol)).as("content_md5"))
-
-  val decodedSchema: StructType = new StructType()
-    .add("key", LongType, false)
-    .add("n_bytes", IntegerType, false)
-    .add("fake_width", IntegerType, false)
-    .add("fake_height", IntegerType, false)
-    .add("fake_mean_luma", DoubleType, false)
 
   // ---- REAL uncompressed-format decoders (no codec libs needed) ----
 
@@ -1103,30 +1093,5 @@ object Media {
         }
       }
     spark.createDataFrame(rdd, decompressSchema)
-  }
-
-  /** STUB DECODE (clearly marked): a real deployment would decode the
-    * remaining codec tier — mp3/h264, i.e. perceptual audio and video —
-    * here with a native library, batched per partition (images are fully
-    * covered by the real PNG/JPEG/GIF/PPM decoders above). The fake
-    * derives deterministic pseudo-features from the bytes so tests can
-    * assert the full distributed plumbing (schema, partitioning, batch
-    * shape) end to end. */
-  def decodeStub(df: DataFrame, binCol: String, keyCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(keyCol).cast("long"), col(binCol)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val key = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        // === STUB: replace with real codec call ===
-        val w = 160 + (if (bytes.length > 0) (bytes(0) & 0xff) else 0)
-        val h = 90 + (if (bytes.length > 1) (bytes(1) & 0xff) else 0)
-        var s = 0L; var i = 0
-        while (i < bytes.length) { s += (bytes(i) & 0xff); i += 1 }
-        val luma = if (bytes.length == 0) 0.0 else s.toDouble / bytes.length / 255.0
-        Row(key, bytes.length, w, h, math.rint(luma * 1e6) / 1e6)
-      }
-    }
-    spark.createDataFrame(rdd, decodedSchema)
   }
 }

@@ -22,6 +22,11 @@ import java.util.concurrent.atomic.AtomicLong
   * would. Synthesized under target/ and reused if present (fixture data,
   * not result caching — every measured query recomputes from parquet).
   *
+  * The fixture keeps only the columns these three queries read (lineitem
+  * l_orderkey/l_partkey, documents doc_id/text), so it supports ONLY
+  * pagerank, connected_components and dedup_exact; extending the leg to
+  * another query means replicating that query's columns too.
+  *
   * Usage: StressLeg [baseSfDir] [outDir]
   */
 object StressLeg {

@@ -54,18 +54,40 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
     val edges = (for (_ <- 0 until 400) yield
       (rnd.nextInt(n - 10).toLong, rnd.nextInt(n).toLong))
       .distinct.filter { case (s, d) => s != d }
+    val outDeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toDouble }
+    /** k rounds of x ← base(v) + Σ_{u→v} w(u, x(u)) on the driver */
+    def unroll(x0: Array[Double], base: Int => Double, w: (Long, Double) => Double,
+               k: Int): Array[Double] = (1 to k).foldLeft(x0) { (x, _) =>
+      val nx = Array.tabulate(n)(base)
+      edges.foreach { case (s, d) => nx(d.toInt) += w(s, x(s.toInt)) }
+      nx
+    }
+    val seeds = 0 until 5
+    val seedMass = (i: Int) => if (seeds.contains(i)) 1.0 / seeds.size else 0.0
     val adj = Adjacency.build(edges.toDF("src", "dst"), n, 4, maxChunk = 8)
     try {
       // 4 = two double-steps; 5 = two double-steps + one single step
       Seq(4, 5).foreach { k =>
-        val res = PageRank.run(spark, adj, damping = 0.85, tol = 0.0, maxIter = k)
-        assert(res.iterations == k)
-        val (want, _) = pagerank3fLocal(n, edges, 0.85, tol = 0.0, itermax = k)
-        val got = res.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        assert(got.size == n)
-        (0 until n).foreach { i =>
-          assert(math.abs(got(i.toLong) - want(i)) < 1e-12,
-            s"k=$k vertex $i: got ${got(i.toLong)}, want ${want(i)}")
+        val pr = PageRank.run(spark, adj, damping = 0.85, tol = 0.0, maxIter = k)
+        val katz = Katz.run(spark, adj, alpha = 0.05, beta = 1.0, tol = 0.0, maxIter = k)
+        val ppr = PersonalizedPageRank.run(spark, adj, seeds.map(_.toLong).toDF("id"),
+          damping = 0.85, tol = 0.0, maxIter = k)
+        val cases = Seq(
+          ("PageRank", pr.scores, pr.iterations,
+            pagerank3fLocal(n, edges, 0.85, tol = 0.0, itermax = k)._1),
+          ("Katz", katz.scores, katz.iterations,
+            unroll(Array.fill(n)(1.0), _ => 1.0, (_, x) => 0.05 * x, k)),
+          ("PPR", ppr.scores, ppr.iterations,
+            unroll(Array.tabulate(n)(seedMass), i => 0.15 * seedMass(i),
+              (s, x) => x * 0.85 / outDeg(s), k)))
+        cases.foreach { case (name, scores, iters, want) =>
+          assert(iters == k, s"$name k=$k")
+          val got = scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+          assert(got.size == n, s"$name k=$k")
+          (0 until n).foreach { i =>
+            assert(math.abs(got(i.toLong) - want(i)) < 1e-12,
+              s"$name k=$k vertex $i: got ${got(i.toLong)}, want ${want(i)}")
+          }
         }
       }
     } finally adj.unpersist()
@@ -219,6 +241,12 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
         maxIter = 3)
       .scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(0L -> 1.0, 1L -> 1.5, 2L -> 1.75))
+    // the convergence path reaches the same fixed point: round 3 changes
+    // nothing, so it stops there with Σ|Δx| = 0 <= tol
+    val conv = Katz.run(spark, adj, alpha = 0.5, beta = 1.0, tol = 1e-9, maxIter = 50)
+    assert(conv.iterations == 3)
+    assert(conv.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(0L -> 1.0, 1L -> 1.5, 2L -> 1.75))
     // and on the pr demo graph, agree with the driver-side recurrence
     val n = 5
     val adj2 = Adjacency.build(prEdges.toDF("src", "dst"), n, 4)
@@ -460,13 +488,18 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
 
   test("Personalized PageRank with the full vertex set as seeds equals plain PageRank") {
     val adj = Adjacency.build(prEdges.toDF("src", "dst"), 5, 4)
-    val plain = PageRank.run(spark, adj, damping = 0.85, tol = 0.0, maxIter = 8)
-      .scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ppr = PersonalizedPageRank.run(spark, adj, spark.range(5).toDF("id"),
-        damping = 0.85, tol = 0.0, maxIter = 8)
-      .scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(ppr.keySet == plain.keySet)
-    plain.foreach { case (k, v) => assert(math.abs(ppr(k) - v) < 1e-12) }
+    // exact iteration count (tol = 0) and the convergence path (tol > 0)
+    Seq((0.0, 8), (1e-6, 100)).foreach { case (tol, maxIter) =>
+      val plain = PageRank.run(spark, adj, damping = 0.85, tol = tol, maxIter = maxIter)
+      val ppr = PersonalizedPageRank.run(spark, adj, spark.range(5).toDF("id"),
+          damping = 0.85, tol = tol, maxIter = maxIter)
+      assert(ppr.iterations == plain.iterations, s"tol=$tol")
+      if (tol > 0) assert(plain.iterations < maxIter)
+      val p = plain.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val q = ppr.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(q.keySet == p.keySet)
+      p.foreach { case (k, v) => assert(math.abs(q(k) - v) < 1e-12, s"tol=$tol vertex $k") }
+    }
   }
 
   test("Personalized PageRank concentrates mass near the seed (driver recurrence)") {

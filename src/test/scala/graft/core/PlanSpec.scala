@@ -118,15 +118,28 @@ class PlanSpec extends AnyFunSuite with SparkTest {
             nodes(s).exists(_.isInstanceOf[InMemoryTableScanExec]))
           assert(!adjResort, s"$what: adjacency re-sorted per iteration:\n$last")
         }
-        // convergence path (tol > 0): one step per materialization, one
-        // exchange (the dst agg) per step
-        graft.algos.PageRank.run(spark, adj, tol = 1e-300, maxIter = 2)
-        checkLast(1, "convergence path")
-        // exact-iteration path (tol == 0, no checkpointer): TWO chained
-        // steps per materialization — two dst-agg exchanges, still one per
-        // iteration, and half the state materializations
-        graft.algos.PageRank.run(spark, adj, tol = 0.0, maxIter = 2)
-        checkLast(2, "exact-iteration double-step")
+        // PageRank, Katz and PPR share Fixpoint.linear's step
+        val algos = Seq[(String, (Double, Int) => Unit)](
+          "PageRank" -> ((tol, k) => graft.algos.PageRank.run(spark, adj, tol = tol, maxIter = k)),
+          "Katz" -> ((tol, k) => graft.algos.Katz.run(spark, adj, tol = tol, maxIter = k)),
+          "PPR" -> ((tol, k) => graft.algos.PersonalizedPageRank.run(spark, adj,
+            spark.range(3).toDF("id"), tol = tol, maxIter = k)))
+        algos.foreach { case (name, run) =>
+          // convergence path (tol > 0): one step per materialization, one
+          // exchange (the dst agg) per step
+          run(1e-300, 2)
+          checkLast(1, s"$name convergence path")
+          // exact-iteration path (tol == 0, no checkpointer): TWO chained
+          // steps per materialization — two dst-agg exchanges, still one per
+          // iteration, and half the state materializations. k = 4 pins the
+          // SECOND double step too: its input is a double-step state, whose
+          // hash partitioning on id must survive the rewrap (no exchange of
+          // the completion universe)
+          Seq(2, 4).foreach { k =>
+            run(0.0, k)
+            checkLast(2, s"$name exact-iteration double-step (k=$k)")
+          }
+        }
       } finally adj.unpersist()
     } finally {
       GraftSqlShims.captureMaterializedPlans = false

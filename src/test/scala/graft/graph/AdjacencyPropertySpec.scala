@@ -21,7 +21,9 @@ import graft.SparkTestSession
   *      iteration joins reuse);
   *   5. int-packing triggers exactly on numVertices ≤ Int.MaxValue and
   *      NEVER changes the recovered edge content;
-  *   6. the layout is partitioning-independent (2 vs 5 partitions). */
+  *   6. the layout is partitioning-independent (2 vs 5 partitions);
+  *   7. `gather` computes Aᵀx with a per-source factor reading `deg`, on
+  *      both the int-packed and the long-packed layout. */
 object AdjacencyPropertySpec extends Properties("AdjacencyProps") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -96,5 +98,25 @@ object AdjacencyPropertySpec extends Properties("AdjacencyProps") {
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
         a2.numEdges == a5.numEdges && flat(a2) == flat(a5)
       } finally { a2.unpersist(); a5.unpersist() }
+    }
+
+  property("gather == driver-side Aᵀ(x/deg) with long dst keys, int- and long-packed") =
+    forAll(genEdges, Gen.listOfN(20, Gen.chooseNum(-1.0, 1.0))) { (es, xs) =>
+      import spark.implicits._
+      val x = xs.toIndexedSeq
+      val outDeg = es.groupBy(_._1).map { case (s, g) => (s, g.size.toDouble) }
+      val want = es.toSeq.groupBy(_._2).map { case (d, in) =>
+        d -> in.map { case (s, _) => x(s.toInt) / outDeg(s) }.sum }
+      val state = x.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+      Seq(20L, Int.MaxValue.toLong + 1).forall { numVertices =>
+        val adj = Adjacency.build(es.toSeq.toDF("src", "dst"), numVertices,
+          numPartitions = 3, maxChunk = 3)
+        try {
+          val g = adj.gather(state, col("v") / col("deg"))
+          val got = g.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+          g.schema("dst").dataType == LongType && got.keySet == want.keySet &&
+            want.forall { case (d, w) => math.abs(got(d) - w) < 1e-12 }
+        } finally adj.unpersist()
+      }
     }
 }

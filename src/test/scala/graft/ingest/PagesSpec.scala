@@ -84,18 +84,6 @@ class PagesSpec extends AnyFunSuite with SparkTest {
     assert(txt.contains("\"partitions\"") && txt.contains("\"rows\""))
   }
 
-  test("media decode stub: schema and deterministic per-row features") {
-    val pages = Pages.synthesize(spark, 50, nSites = 5)
-      .select(monotonically_increasing_id().as("key"), col("html"))
-    val dec = Media.decodeStub(pages, "html", "key").cache()
-    assert(dec.count() == 50)
-    assert(dec.schema.fieldNames.toSeq ==
-      Seq("key", "n_bytes", "fake_width", "fake_height", "fake_mean_luma"))
-    // '<' == 0x3c == 60 → fake_width = 160 + 60
-    assert(dec.filter(col("fake_width") =!= 220).count() == 0)
-    assert(dec.filter(col("fake_mean_luma") <= 0 || col("fake_mean_luma") >= 1).count() == 0)
-  }
-
   test("WAV decode: real RIFF parse recovers header + RMS; malformed dropped") {
     import spark.implicits._
     val keys = Seq(0L, 1L, 7L).toDF("doc_id")

@@ -296,17 +296,6 @@ object ScalingBench {
     throw last
   }
 
-  /** One N → 4N measurement: interleaved trials in one JVM, per-level
-    * minimum (the noise filter this shared host requires). */
-  def measurePair(adjPath: String, nPages: Long, lowCpus: Int, highCpus: Int,
-                  iters: Int, trials: Int): PairResult = {
-    val (lows, highs) = (1 to trials).map { _ =>
-      (timeOnce(adjPath, nPages, lowCpus, iters),
-        timeOnce(adjPath, nPages, highCpus, iters))
-    }.unzip
-    PairResult(nPages, lastEdges, iters, lowCpus, highCpus, lows, highs)
-  }
-
   /** Interleaved multi-level protocol: each trial visits every level once
     * (2, 8, 32, 2, 8, 32, …), per-level minimum; adjacent-level pairs share
     * the middle level's sessions — one 8-core measurement serves both the

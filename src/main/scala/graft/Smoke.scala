@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke runner: exercises the flagship entry pipeline end-to-end and prints
   * a few scores — mirrors the driver's rows>0 check. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.tools.BenchSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry rows=$n")

@@ -119,8 +119,7 @@ object Boruvka {
               .sortWithinPartitions("src"))
           val init = e.df.select(col("ca").as("id")).distinct()
             .select(col("id"), col("id").as("c"))
-          val (st, _) = MinReach.minReachColor(init, mg.df, numPartitions,
-            debugTag = "boruvka")
+          val (st, _) = MinReach.minReachColor(init, mg.df, numPartitions)
           mg.release()
           lblState = st
           st.df

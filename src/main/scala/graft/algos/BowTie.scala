@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Ckpt, CkptState}
 
-final case class BowTieResult(classes: DataFrame, coreId: Long, rounds: Int)
+final case class BowTieResult(classes: DataFrame, coreId: Option[Long], rounds: Int)
 
 /** Bow-tie decomposition of a directed web graph (Broder et al., "Graph
   * structure in the Web", WWW 2000): pick the giant SCC as the CORE, then
@@ -21,7 +21,8 @@ final case class BowTieResult(classes: DataFrame, coreId: Long, rounds: Int)
   * other minimum and pointer jumps keep both passes at ~log-iteration
   * counts instead of graph-diameter ones.
   *
-  * Output: (id, cls) with cls ∈ {'core','in','out','other'}.
+  * Output: (id, cls) with cls ∈ {'core','in','out','other'}; `coreId` is
+  * the core's scc id, None on an empty edge set.
   */
 object BowTie {
 
@@ -33,15 +34,15 @@ object BowTie {
     // giant SCC, deterministic tie-break on the smaller scc id. headOption:
     // an empty edge set yields an empty SCC relation, and the result is
     // then an empty classification, not a NoSuchElementException on the
-    // driver (coreId = -2 matches no vertex and collides with neither real
-    // ids nor the -1 sentinel below).
+    // driver.
     val coreId = comp.groupBy("scc").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("scc"))
       .select(col("scc")).limit(1).collect()
-      .headOption.map(_.getLong(0)).getOrElse(-2L)
+      .headOption.map(_.getLong(0))
+    val isCore = coreId.fold(lit(false))(col("scc") === _)
 
     val seed = comp.select(col("id"),
-      when(col("scc") === coreId, lit(-1L)).otherwise(col("id")).as("c"))
+      when(isCore, lit(-1L)).otherwise(col("id")).as("c"))
 
     // The IN and OUT reachability passes are INDEPENDENT — overlap them
     // from two driver threads (guide §2.6: actions are only sequential
@@ -58,8 +59,7 @@ object BowTie {
           val revState = Ckpt.materialize(edges
             .select(col("dst").as("src"), col("src").as("dst"))
             .repartition(numPartitions, col("src")).sortWithinPartitions("src"))
-          val (inState, _) = MinReach.minReachColor(seed, revState.df,
-            numPartitions, debugTag = "bowtie-in")
+          val (inState, _) = MinReach.minReachColor(seed, revState.df, numPartitions)
           (revState, inState)
         }
       })
@@ -68,8 +68,7 @@ object BowTie {
         def call() = {
           val fwdState = Ckpt.materialize(edges.select(col("src"), col("dst"))
             .repartition(numPartitions, col("src")).sortWithinPartitions("src"))
-          val (outState, _) = MinReach.minReachColor(seed, fwdState.df,
-            numPartitions, debugTag = "bowtie-out")
+          val (outState, _) = MinReach.minReachColor(seed, fwdState.df, numPartitions)
           (fwdState, outState)
         }
       })
@@ -84,7 +83,7 @@ object BowTie {
         .join(inSet, Seq("id"), "left")
         .join(outSet, Seq("id"), "left")
         .select(col("id"),
-          when(col("scc") === coreId, "core")
+          when(isCore, "core")
             .when(col("_in").isNotNull, "in")
             .when(col("_out").isNotNull, "out")
             .otherwise("other").as("cls"))

@@ -11,23 +11,25 @@ import graft.runtime.IterationCheckpointer
   * Each round's plan is materialized via Ckpt (flat plan, O(1) planning cost
   * and O(1) storage in the iteration count) with its convergence metric
   * summed in the SAME job, and the previous round's blocks are released at
-  * once. Loops with two states per round (FastSV), alternating roles
-  * (HITS, BFS, MIS, Coloring) or no convergence metric (Eigenvector) keep
-  * their own loops.
+  * once. LP, SSSP and MinReach (SCC, BowTie and Boruvka's coloring) run on
+  * [[converge]]; PageRank, personalized PageRank and Katz on [[linear]].
+  * Loops with two states per round (FastSV), alternating roles (HITS, BFS,
+  * MIS, Coloring) or no convergence metric (Eigenvector) keep their own
+  * loops.
   */
 object Fixpoint {
 
   /** Run `round` from `init` until `maxIter` rounds have run or the sum of
-    * the round's `metric` column is `<= tol`. Returns the final state (its
-    * columns are whatever `round` produced, metric included) and the number
-    * of rounds run. */
+    * the round's `metric` column is `<= tol`. Returns the final
+    * materialized state (the caller releases it; its columns are whatever
+    * `round` produced, metric included) and the number of rounds run. */
   def converge(init: DataFrame, maxIter: Int, tol: Double, metric: String)
-              (round: DataFrame => DataFrame): (DataFrame, Int) =
+              (round: DataFrame => DataFrame): (CkptState, Int) =
     loop(Ckpt.materialize(init), 0, maxIter, tol, metric, (_, _, _) => ())(round)
 
   private def loop(init: CkptState, start: Int, maxIter: Int, tol: Double,
                    metric: String, save: (DataFrame, Int, Double) => Unit)
-                  (round: DataFrame => DataFrame): (DataFrame, Int) = {
+                  (round: DataFrame => DataFrame): (CkptState, Int) = {
     var state = init
     var iter = start
     var m = Double.PositiveInfinity
@@ -39,7 +41,7 @@ object Fixpoint {
       iter += 1
       save(state.df, iter, m)
     }
-    (state.df, iter)
+    (state, iter)
   }
 
   /** The linear fixpoint x ← base + Aᵀ·factor(x) over the dense state
@@ -97,6 +99,6 @@ object Fixpoint {
     val save = (df: DataFrame, it: Int, d: Double) =>
       checkpointer.foreach(_.save(df.drop("_d"), it, Map("rdiff" -> d.toString)))
     val (last, iters) = loop(state, iter, maxIter, tol, "_d", save)(t => step(t)(t))
-    (last.select(col("id"), col("v")), iters)
+    (last.df.select(col("id"), col("v")), iters)
   }
 }

@@ -50,6 +50,6 @@ object LabelPropagation {
             .otherwise(0.0).as("_chg"))
     }
     edges.unpersist()
-    LPResult(labels.select(col("id"), col("lbl").as("label")), iters)
+    LPResult(labels.df.select(col("id"), col("lbl").as("label")), iters)
   }
 }

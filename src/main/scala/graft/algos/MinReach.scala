@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.{Ckpt, CkptState}
+import graft.core.CkptState
 
 /** Shared accelerated fixpoint for directed min-label reachability:
   *
@@ -26,18 +26,14 @@ import graft.core.{Ckpt, CkptState}
   * per-hop join key — zero-exchange against the hash-partitioned state);
   * `init` is (id, c) over the full vertex set being colored. Each iteration
   * is ONE materialized job: relax gather + state merge + jump self-join,
-  * with the change flag fused into the materialization. Returns the
-  * materialized fixpoint state (caller releases) and the iteration count.
+  * with the change flag fused into the materialization
+  * ([[Fixpoint.converge]]). Returns the materialized fixpoint state (caller
+  * releases) and the iteration count.
   */
 object MinReach {
 
   def minReachColor(init: DataFrame, edges: DataFrame, numPartitions: Int,
-                    maxIters: Int = 256,
-                    debugTag: String = "minreach"): (CkptState, Int) = {
-    var state = Ckpt.materialize(
-      init.repartition(numPartitions, col("id")))
-    var changed = true
-    var iters = 0
+                    maxIters: Int = 256): (CkptState, Int) = {
     // one (relax + jump) step as a derived plan over (id, c, _c0): _c0 (the
     // label at the START of the materialized job) rides along so the change
     // flag needs no join-back. Jumping through the step's OWN relax result
@@ -61,26 +57,15 @@ object MinReach {
           least(col("c1"), coalesce(col("_cj"), col("c1"))).as("c"),
           col("_c0"))
     }
-    while (changed && iters < maxIters) {
-      val c0 = state.df.select(col("id"), col("c"), col("c").as("_c0"))
-      // ONE step per materialized job. A fused double step (step∘step, the
-      // fixpoint is schedule-independent so it would be correct) was
-      // MEASURED 3× the per-job cost here — the step-1 subtree feeds both
-      // the step-2 gather and the step-2 merge branch and recomputes, so
-      // the halved job count lost to the per-job blowup.
-      val next = step(c0)
+    // ONE step per materialized job. A fused double step (step∘step, the
+    // fixpoint is schedule-independent so it would be correct) was
+    // MEASURED 3× the per-job cost here — the step-1 subtree feeds both
+    // the step-2 gather and the step-2 merge branch and recomputes, so
+    // the halved job count lost to the per-job blowup.
+    Fixpoint.converge(init.repartition(numPartitions, col("id")), maxIters, 0.0, "_chg") { s =>
+      step(s.select(col("id"), col("c"), col("c").as("_c0")))
         .select(col("id"), col("c"),
           when(col("c") < col("_c0"), 1.0).otherwise(0.0).as("_chg"))
-      val t0 = System.nanoTime()
-      val (nextState, nChanged) = Ckpt.materializeWithSum(next, "_chg")
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(f"[$debugTag] iter $iters%d: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs changed=$nChanged%.0f")
-      state.release()
-      state = nextState
-      changed = nChanged > 0
-      iters += 1
     }
-    (state, iters)
   }
 }

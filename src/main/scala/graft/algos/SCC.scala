@@ -98,7 +98,7 @@ object SCC {
 
       val (cState, cIters) = MinReach.minReachColor(
         live.select(col("id"), col("id").as("c")), eLive, numPartitions,
-        maxIters = maxColorIters, debugTag = "scc-color")
+        maxIters = maxColorIters)
       totalColorIters += cIters
       val colors = cState.df
 
@@ -117,7 +117,7 @@ object SCC {
 
       val (bState, mIters) = MinReach.minReachColor(
         colors.select(col("id"), col("id").as("c")), intraState.df,
-        numPartitions, maxIters = maxColorIters, debugTag = "scc-mark")
+        numPartitions, maxIters = maxColorIters)
       totalMarkIters += mIters
 
       val cb = bState.df.select(col("id"), col("c").as("_cb"))

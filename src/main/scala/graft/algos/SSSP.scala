@@ -41,6 +41,6 @@ object SSSP {
             .otherwise(0.0).as("_chg"))
     }
     e.unpersist()
-    dist.select(col("id"), col("v").as("dist"))
+    dist.df.select(col("id"), col("v").as("dist"))
   }
 }

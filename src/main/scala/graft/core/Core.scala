@@ -339,9 +339,6 @@ final case class GrbVector(df: DataFrame, size: Long) {
         op(col(V), col("_w")).as(V)),
       GrbShape(size, other.size))
   }
-
-  def cacheEager(): GrbVector = { val d = df.cache(); d.count(); copy(df = d) }
-  def checkpointLocal(): GrbVector = copy(df = df.localCheckpoint(true))
 }
 
 object GrbVector {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Extra benchmark (guide §1.4): times named SparkEntry queries with the
   * NOOP SINK (`format("noop")`), which computes every column of every row —
   * unlike Bench's frozen `count()` action, which can let Catalyst prune
@@ -14,24 +12,15 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    new java.io.File("/dev/shm/graft-spark").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession()
     val dir = args(0)
     val reps = args(1).toInt
     val out = args.drop(2).map { n =>
       val times = (1 to reps).map { _ =>
         spark.sparkContext.setJobDescription(s"benchextra: $n")
         val t0 = System.nanoTime()
-        SparkEntry_query(n, spark, dir)
+        graft.SparkEntry.queries(n)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       spark.sparkContext.setJobDescription(null)
@@ -42,8 +31,4 @@ object BenchExtra {
     println(s"""{"metric":"noop_min_of_$reps","unit":"sec","queries":$qJson,"sf":"$dir"}""")
     spark.stop()
   }
-
-  private def SparkEntry_query(n: String, spark: SparkSession, dir: String): Unit =
-    graft.SparkEntry.queries(n)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{GraftSqlShims, SparkSession}
+import org.apache.spark.sql.GraftSqlShims
 import graft.SparkEntry
 import graft.graph.Adjacency
 import graft.algos.PageRank
@@ -8,7 +8,7 @@ import graft.algos.PageRank
 /** Dev tool: dump the MATERIALIZED per-iteration plan of the PageRank loop
   * (the final result's explain only shows the flat Ckpt rewrap, so the loop
   * body's physical plan is invisible to PlanDump). Captures via the same
-  * GraftSqlShims hook PlanSpec pins, on the bench session conf, for both
+  * GraftSqlShims hook PlanSpec pins, on [[BenchSession]], for both
   * loop paths:
   *   - convergence path (tol > 0): one step per materialization
   *   - exact-iteration path (tol == 0): two chained steps per materialization
@@ -16,16 +16,7 @@ import graft.algos.PageRank
   */
 object IterPlanDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    new java.io.File("/dev/shm/graft-spark").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession()
     val dir = args(0)
     val adj = Adjacency.build(SparkEntry.edgesG(spark, dir),
       SparkEntry.gmod(dir), SparkEntry.gparts(spark, dir))

@@ -6,10 +6,13 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev probe (guide §1/§7): per-query breakdown of WHERE the wall time goes
   * on the bench session — job count, stage count, task count, summed task
-  * run/GC time, and the driver-side gap (wall − in-job time), which is
-  * Catalyst planning + loop logic + AQE stage scheduling. Run as:
-  *   sbt "runMain graft.tools.JobProbe /root/testdata/sf0.1 pagerank coloring"
-  * Session conf mirrors Bench.scala exactly so numbers transfer.
+  * run/GC time, the driver-side gap (wall − in-job time, which is Catalyst
+  * planning + loop logic + AQE stage scheduling), peak task execution
+  * memory, memory/disk spill and shuffle write. `wall` times the same
+  * `count()` action Bench times. Run as:
+  *   tools/run_verify.sh graft.tools.JobProbe <sfDir> pagerank coloring
+  * GRAFT_PROBE_REPS (default 2) sets the repetitions per query; the session
+  * is [[BenchSession]].
   */
 object JobProbe {
   final class Probe extends SparkListener {
@@ -19,6 +22,10 @@ object JobProbe {
     val taskRunMs = new AtomicLong
     val gcMs = new AtomicLong
     val serMs = new AtomicLong
+    val peakExecMem = new AtomicLong
+    val memSpill = new AtomicLong
+    val diskSpill = new AtomicLong
+    val shuffleWrite = new AtomicLong
     // per-stage-NAME aggregation: which operator/callsite eats the task time
     val byStage = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val stageRun = new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
@@ -45,6 +52,10 @@ object JobProbe {
         taskRunMs.addAndGet(m.executorRunTime)
         gcMs.addAndGet(m.jvmGCTime)
         serMs.addAndGet(m.executorDeserializeTime + m.resultSerializationTime)
+        peakExecMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
+        memSpill.addAndGet(m.memoryBytesSpilled)
+        diskSpill.addAndGet(m.diskBytesSpilled)
+        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         val name = byStage.getOrDefault(t.stageId, s"stage${t.stageId}")
         stageRun.computeIfAbsent(name, _ => new AtomicLong)
           .addAndGet(m.executorRunTime)
@@ -60,30 +71,16 @@ object JobProbe {
     }
     def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0)
       taskRunMs.set(0); gcMs.set(0); serMs.set(0); inJobNanos = 0; depth = 0
+      peakExecMem.set(0); memSpill.set(0); diskSpill.set(0); shuffleWrite.set(0)
       byStage.clear(); stageRun.clear(); stageTasks.clear() }
   }
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    new java.io.File("/dev/shm/graft-spark").mkdirs()
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.driver.maxResultSize", "2g")
-    // extra confs for A/B probing, e.g.
-    //   GRAFT_PROBE_CONF="spark.sql.adaptive.enabled=false"
-    sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(',').filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** Run each named query `reps` times on `dir`, one line per rep plus the
+    * top stages by task time after the last rep. */
+  def run(spark: SparkSession, dir: String, queries: Seq[String], reps: Int): Unit = {
     val probe = new Probe
     spark.sparkContext.addSparkListener(probe)
-    val dir = args(0)
-    val reps = sys.env.getOrElse("GRAFT_PROBE_REPS", "2").toInt
-    args.drop(1).foreach { n =>
+    queries.foreach { n =>
       for (r <- 1 to reps) {
         Thread.sleep(200) // let queued listener events drain
         probe.reset()
@@ -92,14 +89,26 @@ object JobProbe {
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(300)
         val inJob = probe.inJobNanos / 1e9
+        val rt = Runtime.getRuntime
         println(f"[probe] $n%-22s rep=$r wall=$wall%6.2f inJob=$inJob%6.2f " +
           f"driverGap=${wall - inJob}%6.2f jobs=${probe.jobs.get}%3d " +
           f"stages=${probe.stages.get}%4d tasks=${probe.tasks.get}%5d " +
           f"taskRun=${probe.taskRunMs.get / 1000.0}%7.1fs gc=${probe.gcMs.get / 1000.0}%5.1fs " +
-          f"ser=${probe.serMs.get / 1000.0}%5.1fs rows=$c")
+          f"ser=${probe.serMs.get / 1000.0}%5.1fs rows=$c " +
+          f"peakTaskExecMem=${probe.peakExecMem.get / 1e6}%.1fMB " +
+          f"memSpill=${probe.memSpill.get / 1e6}%.1fMB " +
+          f"diskSpill=${probe.diskSpill.get / 1e6}%.1fMB " +
+          f"shufWrite=${probe.shuffleWrite.get / 1e6}%.1fMB " +
+          f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e9}%.1fGB")
         if (r == reps) probe.topStages(8).foreach(println)
       }
     }
+    spark.sparkContext.removeSparkListener(probe)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = BenchSession()
+    run(spark, args(0), args.drop(1).toSeq, sys.env.getOrElse("GRAFT_PROBE_REPS", "2").toInt)
     spark.stop()
   }
 }

@@ -1,24 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named SparkEntry queries to
   * stdout (delimited per query) — feeds the plans/r06 before/after
-  * artifacts. Session conf mirrors Bench.scala so plan shapes match what
-  * the driver's bench executes. */
+  * artifacts. Runs on [[BenchSession]] so plan shapes match what the bench
+  * executes. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    new java.io.File("/dev/shm/graft-spark").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchSession()
     val dir = args(0)
     args.drop(1).foreach { n =>
       println(s"===== PLAN $n =====")

@@ -444,15 +444,31 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
     assert(LinkPrediction.jaccard(sym, maxCenterDeg = 2).count() == 0)
   }
 
+  // {0,1,2} and {3,4,5} are the cycles; 2->3 links them acyclically;
+  // 5->6 hangs a tendril
+  private val twoCycles = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 5L),
+    (5L, 3L), (2L, 3L), (5L, 6L))
+
   test("SCC: two 3-cycles bridged by a DAG edge plus a tendril") {
-    // {0,1,2} and {3,4,5} are the cycles; 2->3 links them acyclically;
-    // 5->6 hangs a tendril. SCC ids are the min member.
-    val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 5L), (5L, 3L),
-      (2L, 3L), (5L, 6L)).toDF("src", "dst")
+    // SCC ids are the min member
+    val e = twoCycles.toDF("src", "dst")
     val res = SCC.run(spark, e, numPartitions = 4)
     val got = res.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(0L -> 0L, 1L -> 0L, 2L -> 0L,
       3L -> 3L, 4L -> 3L, 5L -> 3L, 6L -> 6L))
+  }
+
+  test("SCC leaves only the rows backing `components` persisted") {
+    // every per-round state and every MinReach coloring state is released,
+    // so the only newly persisted RDD is the final `assigned` state behind
+    // `components`. Tracks the SET of newly persisted ids (see the
+    // MIS/Matching release test).
+    val e = twoCycles.toDF("src", "dst")
+    def ids = spark.sparkContext.getPersistentRDDs.keySet
+    val before = ids
+    val res = SCC.run(spark, e, numPartitions = 4)
+    assert(res.components.collect().length == 7)
+    assert((ids -- before).size == 1)
   }
 
   test("SCC: a pure DAG resolves entirely to singletons in one trim+mark round") {
@@ -469,13 +485,15 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
     val e = Seq((2L, 3L), (3L, 2L), (0L, 2L), (1L, 0L), (3L, 4L), (4L, 5L),
       (0L, 6L), (7L, 8L)).toDF("src", "dst")
     val res = BowTie.run(spark, e, numPartitions = 4)
-    assert(res.coreId == 2L)
+    assert(res.coreId == Some(2L))
     val got = res.classes.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got === Map(2L -> "core", 3L -> "core", 0L -> "in", 1L -> "in",
       4L -> "out", 5L -> "out", 6L -> "other", 7L -> "other", 8L -> "other"))
     // an empty edge set classifies nothing instead of NoSuchElementException
-    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(BowTie.run(spark, none, numPartitions = 2).classes.count() == 0)
+    val none = BowTie.run(spark, Seq.empty[(Long, Long)].toDF("src", "dst"),
+      numPartitions = 2)
+    assert(none.coreId.isEmpty)
+    assert(none.classes.count() == 0)
   }
 
   test("SCC: a single directed cycle is one component keyed by its min vertex") {
